@@ -26,15 +26,18 @@ the north rule names for 10^12-edge graphs.  Per-round key-degree skew
 is observable through `on_round` and asserted in tests on a 40%-hot
 hub fixture.
 
-Convergence is detected by an order-insensitive (count, hash-sum)
-fingerprint of the edge set — two longs per round, no edge-set
-subtract.  Non-convergence within `max_iter` RAISES (round-3 advice:
-silently returning split components corrupts downstream keep-one
-counts).  Each round's edge list is `localCheckpoint`ed: persist alone
-keeps the FULL logical lineage, so analysis time grows per round and
-dominates within ~10 iterations (measured) — truncation keeps plans
-flat.  On a cluster with executor-loss concerns, swap in reliable
-`checkpoint()` with a checkpoint dir; the algorithm is unchanged.
+Convergence is detected by an order-insensitive fingerprint of the edge
+set — the edge count plus two independent hashes (a xor and a
+decimal(38,0) sum of per-edge xxhash64s, both ANSI-safe), no edge-set
+subtract — that `DataFrame.observe` collects while the round's
+`localCheckpoint` runs, so a round costs one action.  Non-convergence
+within `max_iter` RAISES (round-3 advice: silently returning split
+components corrupts downstream keep-one counts).  Each round's edge
+list is `localCheckpoint`ed: persist alone keeps the FULL logical
+lineage, so analysis time grows per round and dominates within ~10
+iterations (measured) — truncation keeps plans flat.  On a cluster with
+executor-loss concerns, swap in reliable `checkpoint()` with a
+checkpoint dir; the algorithm is unchanged.
 
 At 10^12 docs the working set is the edge list itself — (long, long)
 rows that strictly shrink toward one star edge per non-root vertex; no
@@ -45,43 +48,30 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+
+from audio_quality_checker_spark.session import job_description
 
 
-def _fingerprint_and_stats(edges: DataFrame) -> tuple[int, int, dict]:
-    """One action per round: (n_edges, order-insensitive hash-sum) for
-    convergence detection plus the group-key degree skew stats (max and
-    median degree of the join/group key `u`) for the skew assertion —
-    all from a single two-level agg on the same frame."""
-    # xor-aggregated hashes: order-insensitive, exact-width, and immune
-    # to ANSI-mode long-overflow (a sum of xxhash64s throws under ANSI).
-    # Per-group xor of edge hashes re-xored globally equals the xor over
-    # ALL edges (associativity), so the edge-set hash, the
-    # degree-multiset hash, and the skew stats all ride ONE action.
-    deg = edges.groupBy("u").agg(
-        F.count(F.lit(1)).alias("deg"),
-        F.bit_xor(F.xxhash64("u", "v")).alias("gh"),
+def _skew_stats(edges: DataFrame) -> dict:
+    """Group-key degree skew (max and median degree of the join/group
+    key `u`) for `on_round` callers — an extra action, so only run when
+    someone asks for it."""
+    row = (
+        edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+        .agg(
+            F.sum("deg").alias("n"),
+            F.max("deg").alias("max_deg"),
+            F.percentile_approx("deg", 0.5).alias("p50_deg"),
+            F.count(F.lit(1)).alias("n_keys"),
+        ).first()
     )
-    row = deg.agg(
-        F.sum("deg").alias("n"),
-        F.bit_xor("gh").alias("edge_h"),
-        F.bit_xor(F.xxhash64("u", "deg")).alias("degsum_h"),
-        F.max("deg").alias("max_deg"),
-        F.percentile_approx("deg", 0.5).alias("p50_deg"),
-        F.count(F.lit(1)).alias("n_keys"),
-    ).first()
-    n = row["n"] or 0
-    # the degree-multiset hash is NOT the edge-set hash; combining both
-    # means two different edge sets with equal degree profiles cannot
-    # alias
-    h = (row["edge_h"] or 0) ^ (row["degsum_h"] or 0)
-    stats = {
-        "n_edges": n,
+    return {
+        "n_edges": row["n"] or 0,
         "max_degree": row["max_deg"] or 0,
         "median_degree": row["p50_deg"] or 0,
         "n_keys": row["n_keys"] or 0,
     }
-    return n, h, stats
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -116,32 +106,21 @@ def _orient_high_low(edges: DataFrame) -> DataFrame:
     ).where(F.col("u") != F.col("v")).distinct()
 
 
-def connected_components(
+def _star_edges(
     pairs: DataFrame,
     max_iter: int = 50,
     on_round: Callable[[int, dict], None] | None = None,
 ) -> DataFrame:
-    """(doc_id, component): component = min doc_id reachable via pair
-    edges.  `pairs` needs columns id_a, id_b; vertices are every id
-    appearing in any pair (isolated docs are absent — callers union
-    them back with component = own id, see `keep_one`).
-
-    Large-star/small-star alternation; RAISES RuntimeError if the edge
-    set has not reached a fixpoint within `max_iter` rounds (O(log^2 n)
-    expected — 50 covers any realistic corpus).  `on_round(i, stats)`
-    receives per-round edge count and group-key degree skew."""
-    vertices = (
-        pairs.select(F.col("id_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-        .localCheckpoint()
-    )
+    """The converged star edges (u, v): one edge per non-root vertex u,
+    pointing at its component minimum v < u.  Roots have no edge."""
+    spark = pairs.sparkSession
     edges = _orient_high_low(
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    ).localCheckpoint()
+    )
+    with job_description(spark, "components: input edges"):
+        edges = edges.localCheckpoint()
 
-    prev_fp: tuple[int, int] | None = None
-    converged = False
+    prev_fp: tuple | None = None
     for i in range(max_iter):
         # large-star works on the symmetric view of the current edges
         sym = edges.unionByName(
@@ -151,24 +130,55 @@ def connected_components(
         # small-star needs high->low orientation; large-star output
         # already satisfies u > v (m <= orig-u < v), but re-orienting is
         # cheap insurance and makes the invariant local
-        edges = _small_star(_orient_high_low(ls)).localCheckpoint()
-        n, h, stats = _fingerprint_and_stats(edges)
-        if on_round is not None:
-            on_round(i, stats)
-        fp = (n, h)
+        obs = Observation()
+        # edge count plus two independent order-insensitive hashes, both
+        # exact under ANSI mode: xor cannot overflow, and a decimal(38,0)
+        # sum holds 10^19 edges of |xxhash64| < 2^63
+        nxt = _small_star(_orient_high_low(ls)).observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.bit_xor(F.xxhash64("u", "v")).alias("x"),
+            F.sum(F.xxhash64("v", "u").cast("decimal(38,0)")).alias("s"),
+        )
+        with job_description(spark, f"components: round {i}"):
+            edges = nxt.localCheckpoint()
+            fp = tuple(obs.get.values())
+            if on_round is not None:
+                on_round(i, _skew_stats(edges))
         if prev_fp == fp:
-            converged = True
-            break
+            return edges
         prev_fp = fp
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} "
-            "rounds — graph is pathological or max_iter too low; "
-            "refusing to return split components"
+    raise RuntimeError(
+        f"connected_components did not converge within {max_iter} "
+        "rounds — graph is pathological or max_iter too low; "
+        "refusing to return split components"
+    )
+
+
+def connected_components(
+    pairs: DataFrame,
+    max_iter: int = 50,
+    on_round: Callable[[int, dict], None] | None = None,
+) -> DataFrame:
+    """(doc_id, component): component = min doc_id reachable via pair
+    edges.  `pairs` needs columns id_a, id_b; vertices are every id
+    appearing in any pair (isolated docs are absent — callers union
+    them back with component = own id).
+
+    Large-star/small-star alternation; RAISES RuntimeError if the edge
+    set has not reached a fixpoint within `max_iter` rounds (O(log^2 n)
+    expected — 50 covers any realistic corpus).  `on_round(i, stats)`
+    receives per-round edge count and group-key degree skew."""
+    with job_description(pairs.sparkSession, "components: vertices"):
+        vertices = (
+            pairs.select(F.col("id_a").alias("doc_id"))
+            .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
+            .distinct()
+            .localCheckpoint()
         )
     # fixpoint edges are star edges (member -> component min); roots have
     # no outgoing edge and label themselves
-    labels = edges.select(
+    labels = _star_edges(pairs, max_iter, on_round).select(
         F.col("u").alias("doc_id"), F.col("v").alias("component")
     )
     roots = vertices.join(
@@ -244,9 +254,8 @@ def keep_one(docs: DataFrame, pairs: DataFrame,
              id_col: str = "doc_id") -> DataFrame:
     """The deduplicated corpus: one representative (minimum id) per
     duplicate cluster, plus every document that appears in no pair.
-    Anti-join shape: drop ids whose component label is not their own."""
-    comps = connected_components(pairs)
-    losers = comps.where(F.col("component") != F.col("doc_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
+    The losers are exactly the converged star edges' sources (every
+    non-minimum member has one edge u -> min), so no vertex set or label
+    table is built: one anti-join against them."""
+    losers = _star_edges(pairs).select(F.col("u").alias(id_col))
     return docs.join(losers, id_col, "left_anti")

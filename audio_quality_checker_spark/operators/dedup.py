@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from audio_quality_checker_spark.functions.hashing import splitmix64
+from audio_quality_checker_spark.session import job_description
 
 _SEED_BASE = np.uint64(0x9E3779B97F4A7C15)
 
@@ -165,6 +166,101 @@ def _sorted_id_csr(sets: "list[np.ndarray]"):
     starts = _row_starts(lens)
     flat = np.concatenate(sets) if sets else np.empty(0, np.int64)
     return flat, starts, lens
+
+
+#: key budget per `_sorted_pair_inter` call in the block kernel: a chunk
+#: of candidate pairs expands to about this many (pair, token) keys per
+#: side, ~100 MB of int64 temporaries, whatever the block size.
+_BLOCK_CHUNK_KEYS = 2_000_000
+
+
+def _block_certificate(pdf: pd.DataFrame, threshold: float,
+                       chunk_keys: int = _BLOCK_CHUNK_KEYS) -> pd.DataFrame:
+    """Exact-route kernel for ONE probe block (doc_id, toks, probed):
+    every not-both-probed pair with token-set jaccard >= threshold is
+    verified, and the verified graph is reduced to its connectivity
+    certificate — one (component_min, member, best jaccard) row per
+    non-minimum member.
+
+    Tokens are coded to ids per block (`pd.factorize` on the strings, so
+    the counts equal array_intersect's), pairs are enumerated in chunks
+    of about ``chunk_keys`` keys and counted with `_sorted_pair_inter`;
+    `inter / union` is the same double the JVM division gives, and
+    union 0 (two empty sets) is no edge.  Components come from a
+    vectorized hook-and-compress union-find over each chunk's matches.
+    """
+    # home rows first: pair (i, j > i) is not-both-probed iff i < n_home
+    pdf = pdf.sort_values("probed", kind="stable")
+    n = len(pdf)
+    n_home = int((~pdf["probed"].to_numpy(bool)).sum())
+    ids = pdf["doc_id"].to_numpy(np.int64)
+    toks = pdf["toks"].to_numpy()
+    lens = np.fromiter((len(t) for t in toks), np.int64, n)
+    codes, vocab = pd.factorize(
+        np.concatenate(toks) if lens.sum() else np.empty(0, object)
+    )
+    row = np.repeat(np.arange(n, dtype=np.int64), lens)
+    flat = codes[np.lexsort((codes, row))].astype(np.int64)
+    starts = _row_starts(lens)
+    vocab_n = max(1, len(vocab))
+
+    label = np.arange(n, dtype=np.int64)   # root = smallest row index
+    best = np.full(n, -np.inf)
+    # pairs (i, i+1..n-1) for i < n_home, cut into row ranges whose
+    # pairs stay within the key budget
+    per_pair = max(1, 2 * int(lens.sum()) // max(1, n))
+    max_pairs = max(1, chunk_keys // per_pair)
+    counts = n - 1 - np.arange(n_home, dtype=np.int64)
+    i0 = 0
+    while i0 < n_home:
+        i1 = i0 + 1
+        tot = counts[i0]
+        while i1 < n_home and tot + counts[i1] <= max_pairs:
+            tot += counts[i1]
+            i1 += 1
+        rows = np.arange(i0, i1, dtype=np.int64)
+        i0 = i1
+        ia = np.repeat(rows, counts[rows])
+        ib = _ragged_idx(rows + 1, counts[rows])
+        la, lb = lens[ia], lens[ib]
+        # jaccard <= min/max: a necessary condition, margin for rounding
+        keep = np.minimum(la, lb) >= (threshold - 1e-9) * np.maximum(la, lb)
+        ia, ib, la, lb = ia[keep], ib[keep], la[keep], lb[keep]
+        if ia.size == 0:
+            continue
+        inter = _sorted_pair_inter(flat, starts, lens, ia, ib, vocab_n)
+        union = la + lb - inter
+        ok = union > 0
+        jac = np.zeros(ia.size)
+        jac[ok] = inter[ok] / union[ok]
+        hit = ok & (jac >= threshold)
+        if not hit.any():
+            continue
+        ia, ib, jac = ia[hit], ib[hit], jac[hit]
+        np.maximum.at(best, ia, jac)
+        np.maximum.at(best, ib, jac)
+        # hook each edge's roots onto the smaller one, then compress
+        # paths fully; repeat until both ends of every edge agree
+        while True:
+            ra, rb = label[ia], label[ib]
+            if (ra == rb).all():
+                break
+            m = np.minimum(ra, rb)
+            np.minimum.at(label, ra, m)
+            np.minimum.at(label, rb, m)
+            while True:
+                nxt = label[label]
+                if (nxt == label).all():
+                    break
+                label = nxt
+    members = np.flatnonzero(best > -np.inf)
+    comp_min = np.full(n, np.iinfo(np.int64).max)
+    np.minimum.at(comp_min, label[members], ids[members])
+    root_id = comp_min[label[members]]
+    loser = ids[members] != root_id
+    return pd.DataFrame({"id_a": root_id[loser],
+                         "id_b": ids[members][loser],
+                         "jaccard": best[members][loser]})
 
 
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
@@ -348,16 +444,18 @@ def _materialize_and_probe_dups(sigs: DataFrame, sig_expr) -> float:
 
 
 def _finish_pairs(out: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Materialize a (small) pair-output frame, then release the
-    build-side caches it was derived from.  Returning a lazy frame that
-    still references persisted intermediates leaks one cached DataFrame
-    per call in a long-lived session (callers never see the handles) —
-    the jaccard_pairs_guarded lifecycle, factored out.  The returned
-    frame is persisted; callers that are done with it may unpersist."""
+    """Persist a (small) pair-output frame and release the build-side
+    caches it was derived from.  Returning a lazy frame that still
+    references persisted intermediates leaks one cached DataFrame per
+    call in a long-lived session (callers never see the handles), so
+    when there are caches the output is materialized before they are
+    dropped; without caches it stays lazy and its consumer's first
+    action fills it.  Callers that are done with it may unpersist."""
     out.persist()
-    out.count()
-    for c in caches:
-        c.unpersist()
+    if caches:
+        out.count()
+        for c in caches:
+            c.unpersist()
     return out
 
 
@@ -765,21 +863,26 @@ def simhash_pairs_multitable(sigs: DataFrame, id_col: str = "doc_id",
 
 
 class _GuardedRoutes:
-    """The two verified routes of the guarded surface, still lazy, plus
-    the caches the builder persisted (callers hand them to
-    _finish_pairs after deriving their output).
+    """The verified routes of the guarded surface, still lazy, plus the
+    caches the builder persisted (callers hand them to _finish_pairs
+    after deriving their output).
 
-    For hot_route="pairs" the builder also exposes the class-collapsed
-    intermediates (``classes``: one row per distinct (lang, bucket,
-    token-set) equivalence class; ``vcls``: the verified >= threshold
-    class-pair list) so the pair surface can deduplicate routes at
-    class granularity instead of re-aggregating the expanded doc-pair
-    stream."""
+    ``small`` holds the exact route's probe rows (doc_id, lang, toks,
+    blk, probed); ``exact_pairs`` is their JVM all-pairs match stream.
+    ``hot_pairs`` is None when no block exceeds the cap — the LSH route
+    is then not planned at all.  For hot_route="pairs" the builder also
+    exposes the class-collapsed intermediates (``classes``: one row per
+    distinct (lang, bucket, token-set) equivalence class; ``vcls``: the
+    verified >= threshold class-pair list) so the pair surface can
+    deduplicate routes at class granularity instead of re-aggregating
+    the expanded doc-pair stream."""
 
-    __slots__ = ("exact_pairs", "hot_pairs", "caches", "classes", "vcls")
+    __slots__ = ("small", "exact_pairs", "hot_pairs", "caches", "classes",
+                 "vcls")
 
-    def __init__(self, exact_pairs, hot_pairs, caches,
+    def __init__(self, small, exact_pairs, hot_pairs, caches,
                  classes=None, vcls=None):
+        self.small = small
         self.exact_pairs = exact_pairs
         self.hot_pairs = hot_pairs
         self.caches = caches
@@ -800,14 +903,18 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     |bucket delta| <= 1}; probed x probed row pairs are excluded (each
     pair is compared once, in its bucket max(blk_a, blk_b)), and block
     populations come from a broadcast (lang, bucket) counts dimension
-    rather than a count window over the exploded payload rows.
+    rather than a count window over the exploded payload rows.  Rows
+    with a null lang or a null text have no block and never pair (the
+    blocked compare's `==` semantics).
 
     Route 1 (exact): per (lang, bucket), blocks up to ``block_cap`` rows
     run the exact all-pairs compare (n^2 bounded by cap^2 per block).
     Route 2 (hot): larger blocks go through token-set MinHash banding
     (shingle_k=1, so the candidate metric IS the verify metric — the
     round-5 recall lesson) and are verified with the SAME exact jaccard;
-    precision is exact everywhere.
+    precision is exact everywhere.  Route 2 is planned only when some
+    block exceeds the cap: one scalar action learns the largest block
+    population first.
 
     ``hot_route`` picks route 2's candidate set:
       "pairs" — ALL band-colliding doc pairs (|bucket delta| <= 1, same
@@ -835,6 +942,8 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
           volume.  Asserted equal on the planted fixtures and the
           t=0.5 template corpus by tests/bounds gates.
     """
+    if hot_route not in ("pairs", "star"):  # pragma: no cover - caller bug
+        raise ValueError(f"unknown hot_route {hot_route!r}")
     toks = F.array_distinct(
         F.filter(F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
                  lambda t: t != "")
@@ -857,10 +966,9 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
         toks.alias("toks"),
     )
     base.persist(StorageLevel.MEMORY_AND_DISK)
-    # eager: the blk_pop broadcast builds run as concurrent futures and
-    # otherwise race the cold cache, each re-scanning and re-tokenizing
-    # the source (three duplicate scan stages measured at sf1)
-    base.count()
+    keyed = base.where(
+        F.col("lang").isNotNull() & F.col("len_blk").isNotNull()
+    )
     # Block-population COUNTS are a tiny (lang, bucket) dimension —
     # aggregate them first and BROADCAST them back, instead of running a
     # count window over the exploded payload-carrying frame (the round-4
@@ -868,7 +976,7 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     # bucket size; at sf1 that window + persist was ~40% of the
     # operator).  Probed population of bucket b = home docs of b plus
     # docs probing up from b-1.
-    floor_counts = base.groupBy("lang", "len_blk").agg(
+    floor_counts = keyed.groupBy("lang", "len_blk").agg(
         F.count(F.lit(1)).alias("c")
     )
     blk_pop = (
@@ -881,36 +989,45 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
         .groupBy("lang", "blk")
         .agg(F.sum("c").alias("blk_n"))
     )
-    base2 = (
-        base.join(
-            F.broadcast(
-                blk_pop.select(
-                    "lang",
-                    F.col("blk").alias("len_blk"),
-                    F.col("blk_n").alias("blk_n_home"),
-                )
-            ),
-            ["lang", "len_blk"],
-            "left",
+    # ONE scalar action decides whether any block needs route 2; it
+    # also fills the `base` cache before the concurrent broadcast builds
+    # below would race a cold cache (three duplicate scan stages were
+    # measured at sf1 without an eager fill).
+    with job_description(df.sparkSession, "near-dup: block populations"):
+        max_n = blk_pop.agg(F.max("blk_n")).first()[0] or 0
+    hot = max_n > block_cap
+    if hot:
+        base2 = (
+            keyed.join(
+                F.broadcast(
+                    blk_pop.select(
+                        "lang",
+                        F.col("blk").alias("len_blk"),
+                        F.col("blk_n").alias("blk_n_home"),
+                    )
+                ),
+                ["lang", "len_blk"],
+            )
+            .join(
+                F.broadcast(
+                    blk_pop.select(
+                        "lang",
+                        (F.col("blk") - 1).alias("len_blk"),
+                        F.col("blk_n").alias("blk_n_up"),
+                    )
+                ),
+                ["lang", "len_blk"],
+            )
         )
-        .join(
-            F.broadcast(
-                blk_pop.select(
-                    "lang",
-                    (F.col("blk") - 1).alias("len_blk"),
-                    F.col("blk_n").alias("blk_n_up"),
-                )
-            ),
-            ["lang", "len_blk"],
-            "left",
-        )
-    )
-
-    inter = F.size(F.array_intersect("a.toks", "b.toks"))
-    union = F.size("a.toks") + F.size("b.toks") - inter
-    # empty-token docs (whitespace-only text) give union 0: no defined
-    # similarity, and ANSI mode makes the bare division a hard error
-    jac = F.when(union > 0, inter / union).alias("jaccard")
+        home_ok = F.col("blk_n_home") <= block_cap
+        up_ok = F.col("blk_n_up") <= block_cap
+    else:
+        # every block is within the cap: route 1 takes every keyed row
+        # and reads the source once, so `base` is dropped and the
+        # surfaces return lazily (a cache their output reads would have
+        # to be materialized through before it could be released)
+        base.unpersist()
+        base2, home_ok, up_ok = keyed, F.lit(True), F.lit(True)
 
     # route 1: exact all-pairs inside bounded blocks.  Each doc yields a
     # HOME probe row (its own bucket) and an UP probe row (the next
@@ -928,20 +1045,25 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     # ~18% of the adjacent cross-bucket recall on the documents corpus),
     # so shrinking the probe would silently shrink the pair universe.
     small = (
-        base2.where(F.col("blk_n_home") <= block_cap)
+        base2.where(home_ok)
         .select(
             "doc_id", "lang", "toks",
             F.col("len_blk").alias("blk"),
             F.lit(False).alias("probed"),
         )
         .unionByName(
-            base2.where(F.col("blk_n_up") <= block_cap).select(
+            base2.where(up_ok).select(
                 "doc_id", "lang", "toks",
                 (F.col("len_blk") + 1).alias("blk"),
                 F.lit(True).alias("probed"),
             )
         )
     )
+    inter = F.size(F.array_intersect("a.toks", "b.toks"))
+    union = F.size("a.toks") + F.size("b.toks") - inter
+    # empty-token docs (whitespace-only text) give union 0: no defined
+    # similarity, and ANSI mode makes the bare division a hard error
+    jac = F.when(union > 0, inter / union).alias("jaccard")
     a, b = small.alias("a"), small.alias("b")
     exact_pairs = a.join(
         b,
@@ -953,13 +1075,9 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
         F.col("a.doc_id").alias("id_a"),
         F.col("b.doc_id").alias("id_b"),
         jac,
-        # the bucket the pair was compared in rides along so the edge
-        # surface can reduce match rows per bucket without re-shuffling
-        # (the join already partitions by these keys); pair consumers
-        # drop the two columns before their final per-pair dedup
-        F.col("a.lang").alias("lang"),
-        F.col("a.blk").alias("blk"),
     ).where(F.col("jaccard") >= threshold)
+    if not hot:
+        return _GuardedRoutes(small, exact_pairs, None, ())
 
     # route 2: LSH for the oversized blocks, verified exactly.
     # Signatures hash the CACHED token projection of `base2` directly
@@ -976,9 +1094,9 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     # ~0% of reordered-template pairs).  Banding collision probability
     # vs true token jaccard: ~0.87 at j=0.5, ~0.99 at j=0.7 (asserted
     # by the hot-block recall test).
-    need = base2.where(
-        (F.col("blk_n_home") > block_cap) | (F.col("blk_n_up") > block_cap)
-    ).select("doc_id", "lang", "len_blk", "toks")
+    need = base2.where(~home_ok | ~up_ok).select(
+        "doc_id", "lang", "len_blk", "toks"
+    )
     if hot_route == "pairs":
         # CLASS COLLAPSE: docs sharing an identical token SET inside
         # the same (lang, bucket) are interchangeable for candidate
@@ -1171,10 +1289,8 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
             )
         )
         hot_pairs = cross.unionByName(within)
-        return _GuardedRoutes(exact_pairs, hot_pairs, (cls_sigs, base),
-                              classes=classes, vcls=vcls)
-    if hot_route != "star":  # pragma: no cover - caller bug
-        raise ValueError(f"unknown hot_route {hot_route!r}")
+        return _GuardedRoutes(small, exact_pairs, hot_pairs,
+                              (cls_sigs, base), classes=classes, vcls=vcls)
     # K-anchor star routes, CLASS-COLLAPSED (the same equivalence
     # argument as the "pairs" route): bucket membership, the
     # |delta bucket| <= 1 predicate and the verified jaccard are all
@@ -1262,19 +1378,21 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
     # (guide §2.6 — concurrent independent jobs back-fill the tail)
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     def _collect_vrows():
         return (
-            base2.where(
-                (F.col("blk_n_home") > block_cap)
-                | (F.col("blk_n_up") > block_cap)
-            )
-            .select("doc_id", F.sort_array("toks").alias("ts"))
+            need.select("doc_id", F.sort_array("toks").alias("ts"))
             .limit(_DOC_VERIFY_BROADCAST_MAX + 1)
             .collect()
         )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fut = pool.submit(_collect_vrows)
+        # inheritable: the collect's jobs keep the caller's job group
+        # and description
+        fut = pool.submit(
+            inheritable_thread_target(df.sparkSession)(_collect_vrows)
+        )
         s_sigs.count()  # also fills the scls cache it derives from
         vrows = fut.result()
     if len(vrows) <= _DOC_VERIFY_BROADCAST_MAX:
@@ -1357,7 +1475,8 @@ def _guarded_routes(df: DataFrame, id_col: str, text_col: str,
             )
             .where(F.col("jaccard") >= threshold)
         )
-    return _GuardedRoutes(exact_pairs, hot_pairs, (s_sigs, scls, base))
+    return _GuardedRoutes(small, exact_pairs, hot_pairs,
+                          (s_sigs, scls, base))
 
 
 def jaccard_pairs_guarded(df: DataFrame, id_col: str = "doc_id",
@@ -1397,10 +1516,12 @@ def jaccard_pairs_guarded(df: DataFrame, id_col: str = "doc_id",
     # exact-route pairs: dedup within the route (a pair sharing two
     # under-cap buckets is found twice with the same value) ...
     exact_d = (
-        routes.exact_pairs.select("id_a", "id_b", "jaccard")
+        routes.exact_pairs
         .groupBy("id_a", "id_b")
         .agg(F.min("jaccard").alias("jaccard"))
     )
+    if routes.hot_pairs is None:
+        return _finish_pairs(exact_d)
     # ... then drop the ones the hot route also found: map each doc to
     # its class (docs outside every oversized block have none and can
     # never be hot) — same class => covered by the within-class
@@ -1442,7 +1563,6 @@ def jaccard_edges_guarded(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", lang_col: str = "lang",
                           threshold: float = 0.5,
                           block_cap: int = 5_000,
-                          exact_route: str = "certificate",
                           star_reps: int = 8) -> DataFrame:
     """(id_a, id_b, jaccard): O(n)-output verified EDGES spanning the
     guarded surface's duplicate clusters — the keep-one/components feed
@@ -1451,84 +1571,36 @@ def jaccard_edges_guarded(df: DataFrame, id_col: str = "doc_id",
     at sf1, while a survivor set needs O(n) information).
 
     Hot blocks: star edges against each band bucket's min-id rep
-    (O(n*bands); see _guarded_routes).  Small blocks (``exact_route``):
-      "certificate" — the exact all-pairs compare runs unchanged
-          (compute bounded by cap^2 per block), then each bucket's
-          verified match rows are reduced IN PLACE to a sparse
-          connectivity certificate: union-find per (lang, bucket) group
-          emits one star edge (component_min, member) per member —
-          <= block-1 edges per bucket.  The union of per-bucket
-          certificates has EXACTLY the same connected components as the
-          union of per-bucket match graphs (a path through any bucket's
-          graph is replayed through that bucket's certificate), so
-          keep-one survivors are identical to the full-pair surface's
-          wherever the exact route applies — no chain caveat.  The
-          groupBy reuses the exact join's (lang, blk) partitioning, so
-          the O(block^2) match rows are reduced where they were
-          produced, never re-shuffled or materialized; per-group state
-          is bounded by the same cap^2 that bounds the compare.
-          Edge jaccard = the member's STRONGEST verified similarity in
-          the bucket (a real verified value >= threshold; the
-          certificate witnesses connectivity, not a specific pair).
-      "pairs" — full within-block pairs (exact parity with
-          jaccard_pairs_guarded's route 1, output bounded by cap/doc).
+    (O(n*bands); see _guarded_routes).  Small blocks: one grouped
+    pandas kernel per (lang, bucket) probe block (`_block_certificate`)
+    runs the exact all-pairs compare (compute bounded by cap^2 per
+    block) and reduces the verified matches IN PLACE to a sparse
+    connectivity certificate: union-find over the block emits one star
+    edge (component_min, member) per member — <= block-1 edges per
+    bucket.  The union of per-bucket certificates has EXACTLY the same
+    connected components as the union of per-bucket match graphs (a
+    path through any bucket's graph is replayed through that bucket's
+    certificate), so keep-one survivors are identical to the full-pair
+    surface's wherever the exact route applies — no chain caveat.
+    Each block crosses the Arrow boundary once; the O(block^2) match
+    rows never leave the kernel.  Edge jaccard = the member's STRONGEST
+    verified similarity in the bucket (a real verified value >=
+    threshold; the certificate witnesses connectivity, not a specific
+    pair).
 
     Edges from the two routes are unioned and per-edge deduplicated.
-    Returned persisted/materialized; callers may unpersist."""
+    Returned persisted (materialized only when the hot route ran);
+    callers may unpersist."""
     routes = _guarded_routes(df, id_col, text_col, lang_col, threshold,
                              block_cap, hot_route="star",
                              star_reps=star_reps)
-    exact = routes.exact_pairs
-    if exact_route == "certificate":
-        def _cert(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids = np.unique(
-                np.concatenate([pdf["id_a"].to_numpy(),
-                                pdf["id_b"].to_numpy()])
-            )  # sorted, so index order == id order and root 0 is min-id
-            idx = pd.Series(np.arange(len(ids)), index=ids)
-            parent = np.arange(len(ids))
-
-            def find(i: int) -> int:
-                while parent[i] != i:
-                    parent[i] = parent[parent[i]]
-                    i = parent[i]
-                return i
-
-            ia = idx[pdf["id_a"].to_numpy()].to_numpy()
-            ib = idx[pdf["id_b"].to_numpy()].to_numpy()
-            for x, y in zip(ia, ib):
-                rx, ry = find(x), find(y)
-                if rx != ry:
-                    # union by smaller INDEX = smaller id, so every
-                    # root is its component's minimum id
-                    if rx < ry:
-                        parent[ry] = rx
-                    else:
-                        parent[rx] = ry
-            roots = np.array([find(i) for i in range(len(ids))])
-            best = pd.concat([
-                pdf[["id_a", "jaccard"]].rename(columns={"id_a": "d"}),
-                pdf[["id_b", "jaccard"]].rename(columns={"id_b": "d"}),
-            ]).groupby("d")["jaccard"].max()
-            members = np.flatnonzero(roots != np.arange(len(ids)))
-            return pd.DataFrame({
-                "id_a": ids[roots[members]],
-                "id_b": ids[members],
-                "jaccard": best.loc[ids[members]].to_numpy(),
-            })
-
-        exact = routes.exact_pairs.groupBy("lang", "blk").applyInPandas(
-            _cert, schema="id_a long, id_b long, jaccard double"
-        )
-    elif exact_route == "pairs":
-        exact = exact.select("id_a", "id_b", "jaccard")
-    else:  # pragma: no cover - caller bug
-        raise ValueError(f"unknown exact_route {exact_route!r}")
-    out = (
-        exact.unionByName(routes.hot_pairs)
-        .groupBy("id_a", "id_b")
-        .agg(F.min("jaccard").alias("jaccard"))
+    out = routes.small.groupBy("lang", "blk").applyInPandas(
+        lambda pdf: _block_certificate(pdf, threshold),
+        schema="id_a long, id_b long, jaccard double",
     )
+    if routes.hot_pairs is not None:
+        out = out.unionByName(routes.hot_pairs)
+    out = out.groupBy("id_a", "id_b").agg(F.min("jaccard").alias("jaccard"))
     return _finish_pairs(out, *routes.caches)
 
 
@@ -1550,9 +1622,9 @@ def near_dup_members_guarded(df: DataFrame, id_col: str = "doc_id",
     routes = _guarded_routes(df, id_col, text_col, lang_col, threshold,
                              block_cap, hot_route="star",
                              star_reps=star_reps)
-    both = routes.exact_pairs.select("id_a", "id_b", "jaccard").unionByName(
-        routes.hot_pairs
-    )
+    both = routes.exact_pairs
+    if routes.hot_pairs is not None:
+        both = both.unionByName(routes.hot_pairs)
     # ONE consumer of `both`: the old two-leg union (select id_a UNION
     # select id_b) referenced the expensive match subtree twice, so the
     # exact all-pairs join and the star verify each ran TWICE in the

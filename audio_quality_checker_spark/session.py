@@ -9,6 +9,7 @@ here so the same module configures ``spark-submit`` jobs.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -17,6 +18,41 @@ from pyspark.sql import SparkSession
 # transfer, small enough to never blow executor memory (the analog of the
 # reference's 4096-sample true-peak chunking, true_peak.rs:104-117).
 ARROW_BATCH_ROWS = 10_000
+
+
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 48g, as a JVM size string.
+
+    Local mode runs the whole cluster in the driver heap, but the pandas
+    workers live outside it: on a 15 GB host an 8g heap peaked at ~11 GB
+    used, and a 48g heap let ParallelGC grow past RAM until the kernel
+    killed the JVM.  ``SPARK_DRIVER_MEM`` overrides this default."""
+    total_kb = 0
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_kb = int(line.split()[1])
+                    break
+    except OSError:
+        pass
+    if not total_kb:
+        return "4g"
+    return f"{max(1, min(48, total_kb // (2 * 1024 * 1024)))}g"
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Label every Spark job started inside the block (``spark.job.
+    description``, shown by the UI and recorded in the event log), then
+    restore the previous label.  The job group is left alone."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def get_spark(
@@ -49,10 +85,12 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_BATCH_ROWS),
         )
-        # local mode = driver-only: the driver heap IS the cluster memory.
-        # Sized so the features cache for bench-tier corpora (columnar,
-        # compressed) plus shuffle buffers fit without GC thrash.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # local mode = driver-only: the driver heap IS the cluster memory
+        # (sized from the host, see default_driver_memory)
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         # ParallelGC over G1: scans of multi-KB binary columns decompress
         # through JNI critical regions on every task thread; G1's GCLocker
         # stalls under that at high core counts ("Retried waiting for

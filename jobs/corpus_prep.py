@@ -127,11 +127,17 @@ def main(argv=None) -> int:
     from audio_quality_checker_spark.operators.dedup import (
         jaccard_edges_guarded,
     )
-    from audio_quality_checker_spark.session import get_spark
+    from audio_quality_checker_spark.session import get_spark, job_description
 
     spark = get_spark(app_name="aqcs-corpus-prep", cores=args.cores)
+
+    def stage(name: str):
+        """Label the stage's Spark jobs (UI and event log)."""
+        return job_description(spark, f"corpus_prep: {name}")
+
     docs = spark.read.parquet(args.docs)
-    n_input = docs.count()
+    with stage("0 input"):
+        n_input = docs.count()
 
     # 0. url-level collapse: one doc (min doc_id = first-crawled proxy)
     # per canonical url.  Null/unparseable canonicals are never grouped
@@ -148,7 +154,8 @@ def main(argv=None) -> int:
             .unionByName(cu.where(F.col("__cu").isNull()).select("doc_id"))
         )
         docs = docs.join(u_keep, "doc_id")
-        n_url = docs.count()
+        with stage("0 url collapse"):
+            n_url = docs.count()
     else:
         n_url = n_input
 
@@ -157,7 +164,8 @@ def main(argv=None) -> int:
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     )
     usable.persist()
-    n_usable = usable.count()
+    with stage("1 usable"):
+        n_usable = usable.count()
 
     # 1b. line-level boilerplate removal (opt-in, --line-dedup-df):
     # strip lines shared by >= N distinct docs BEFORE content dedup,
@@ -176,10 +184,11 @@ def main(argv=None) -> int:
             F.length(F.trim("text")) > 0
         ).drop("n_lines_removed")
         cleaned.persist()
-        n_line_cleaned = cleaned.count()
-        n_lines_removed = int(
-            stripped.agg(F.sum("n_lines_removed")).collect()[0][0] or 0
-        )
+        with stage("1b line dedup"):
+            n_line_cleaned = cleaned.count()
+            n_lines_removed = int(
+                stripped.agg(F.sum("n_lines_removed")).collect()[0][0] or 0
+            )
         usable.unpersist()
         usable = cleaned
     else:
@@ -194,7 +203,8 @@ def main(argv=None) -> int:
     )
     exact = usable.join(keep_ids, "doc_id")
     exact.persist()
-    n_exact = exact.count()
+    with stage("2 exact dedup"):
+        n_exact = exact.count()
     usable.unpersist()
 
     # 3. near-dup keep-one (guarded EDGE search -> components).  The
@@ -203,12 +213,13 @@ def main(argv=None) -> int:
     # route) — survivors identical wherever the exact route applies,
     # and the 94%-template corpus no longer materializes an
     # O(cluster^2) pair frame just to pick one representative.
-    edges = jaccard_edges_guarded(
-        exact, threshold=args.threshold, block_cap=args.block_cap
-    )
-    deduped = keep_one(exact, edges.select("id_a", "id_b"))
-    deduped.persist()
-    n_dedup = deduped.count()
+    with stage("3 near-dup keep-one"):
+        edges = jaccard_edges_guarded(
+            exact, threshold=args.threshold, block_cap=args.block_cap
+        )
+        deduped = keep_one(exact, edges.select("id_a", "id_b"))
+        deduped.persist()
+        n_dedup = deduped.count()
     edges.unpersist()
     exact.unpersist()
 
@@ -225,7 +236,8 @@ def main(argv=None) -> int:
     ).drop("n_chars_q", "punct_ratio", "digit_ratio", "upper_ratio",
            "stopword_ratio", "mean_token_len")
     kept.persist()
-    n_kept = kept.count()
+    with stage("4 filters"):
+        n_kept = kept.count()
     deduped.unpersist()
 
     # 5. eval-set decontamination (opt-in): quarantine every doc
@@ -243,7 +255,8 @@ def main(argv=None) -> int:
         ).select("doc_id")
         clean = kept.join(contaminated, "doc_id", "left_anti")
         clean.persist()
-        n_clean = clean.count()
+        with stage("5 decontamination"):
+            n_clean = clean.count()
         kept.unpersist()
         kept = clean
     else:
@@ -263,10 +276,11 @@ def main(argv=None) -> int:
         # (the later kept.unpersist() must hit the frame that holds
         # the cache)
         had_pii = sum(pii_count_cols("text").values(), F.lit(0)) > 0
-        n_pii = kept.where(had_pii).count()
         scrubbed = kept.withColumn("text", scrub_pii_col("text"))
         scrubbed.persist()
-        scrubbed.count()
+        with stage("6 pii scrub"):
+            n_pii = kept.where(had_pii).count()
+            scrubbed.count()
         kept.unpersist()
         kept = scrubbed
     else:
@@ -278,7 +292,8 @@ def main(argv=None) -> int:
     # feeds the budget mix, the per-lang budget table, the corpus sink
     # and the shard writer (previously the shards path re-ran the BPE
     # count from scratch).
-    merges = train_bpe(kept, vocab_size=args.bpe_vocab)
+    with stage("7 bpe train"):
+        merges = train_bpe(kept, vocab_size=args.bpe_vocab)
     counted = bpe_token_counts(kept, merges)
     if args.token_budget:
         from audio_quality_checker_spark.operators.mixing import (
@@ -289,7 +304,8 @@ def main(argv=None) -> int:
             counted, args.token_budget, "lang", "bpe_tokens"
         ).drop("cum_before")
     counted.persist()
-    n_final = counted.count()
+    with stage("7 bpe count"):
+        n_final = counted.count()
     kept.unpersist()
     budget = (
         counted.groupBy("lang")
@@ -300,25 +316,26 @@ def main(argv=None) -> int:
         .orderBy("lang")
     )
 
-    if args.shards:
-        from audio_quality_checker_spark.operators.sharding import (
-            shard_balance_report,
-            shard_by_weight,
-        )
+    with stage("8 write"):
+        if args.shards:
+            from audio_quality_checker_spark.operators.sharding import (
+                shard_balance_report,
+                shard_by_weight,
+            )
 
-        sharded = shard_by_weight(counted, args.shards)
-        sharded.write.mode("overwrite").partitionBy("shard").parquet(
-            f"{args.out}/corpus"
+            sharded = shard_by_weight(counted, args.shards)
+            sharded.write.mode("overwrite").partitionBy("shard").parquet(
+                f"{args.out}/corpus"
+            )
+            shard_balance_report(
+                spark.read.parquet(f"{args.out}/corpus")
+            ).write.mode("overwrite").parquet(f"{args.out}/shard_report")
+        else:
+            counted.write.mode("overwrite").parquet(f"{args.out}/corpus")
+        budget.write.mode("overwrite").parquet(f"{args.out}/budget")
+        total_tokens = (
+            budget.agg(F.sum("total_bpe_tokens")).collect()[0][0] or 0
         )
-        shard_balance_report(
-            spark.read.parquet(f"{args.out}/corpus")
-        ).write.mode("overwrite").parquet(f"{args.out}/shard_report")
-    else:
-        counted.write.mode("overwrite").parquet(f"{args.out}/corpus")
-    budget.write.mode("overwrite").parquet(f"{args.out}/budget")
-    total_tokens = (
-        budget.agg(F.sum("total_bpe_tokens")).collect()[0][0] or 0
-    )
     counted.unpersist()
 
     print(json.dumps({

@@ -151,3 +151,60 @@ def test_nonconvergence_raises(spark):
     edges = [(i, i + 1) for i in range(0, 40)]
     with pytest.raises(RuntimeError, match="converge"):
         connected_components(_pairs(spark, edges), max_iter=1)
+
+
+def test_keep_one_equals_minlabel_survivors(spark):
+    """keep_one takes its losers straight from the converged star edges;
+    its survivors must equal those of the min-label baseline labels
+    (plus every document in no pair) on random graphs."""
+    import numpy as np
+
+    from audio_quality_checker_spark.operators.components import (
+        connected_components_minlabel,
+    )
+
+    for seed in (3, 11):
+        rng = np.random.default_rng(seed)
+        edges = list({
+            (int(min(a, b)), int(max(a, b)))
+            for a, b in rng.integers(0, 300, size=(200, 2))
+            if a != b
+        })
+        df = _pairs(spark, edges)
+        docs = spark.createDataFrame(
+            pd.DataFrame({"doc_id": range(320)})
+        )
+        got = {r["doc_id"] for r in keep_one(docs, df).collect()}
+        labels = connected_components_minlabel(df, max_iter=50).collect()
+        losers = {r["doc_id"] for r in labels
+                  if r["component"] != r["doc_id"]}
+        assert got == set(range(320)) - losers
+
+
+def test_job_description_labels_and_restores(spark):
+    from audio_quality_checker_spark.session import job_description
+
+    sc = spark.sparkContext
+    sc.setJobDescription("outer")
+    try:
+        with job_description(spark, "inner"):
+            assert sc.getLocalProperty("spark.job.description") == "inner"
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    with job_description(spark, "inner"):
+        pass
+    assert sc.getLocalProperty("spark.job.description") is None
+
+
+def test_default_driver_memory_fits_the_host():
+    import os
+
+    from audio_quality_checker_spark.session import default_driver_memory
+
+    mem = default_driver_memory()
+    assert mem.endswith("g")
+    gb = int(mem[:-1])
+    assert 1 <= gb <= 48
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert gb * 2**30 <= max(phys / 2, 2**30)

@@ -730,3 +730,141 @@ def test_sorted_pair_inter_matches_bruteforce():
         ).reshape(npairs)
         assert got.shape == want.shape
         assert (got == want).all()
+
+
+# ---------------------------------------------------------------------------
+# Exact-route block kernel and the hot-route planning guard
+# ---------------------------------------------------------------------------
+
+
+def _uf_certificate(rows, thr):
+    """Brute-force reference of one probe block's certificate: Python
+    set jaccard over every not-both-probed pair, union-find to the
+    component minimum, best verified jaccard per member."""
+    best = {}
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for i, (da, ta, pa) in enumerate(rows):
+        for db, tb, pb in rows[i + 1:]:
+            if pa and pb:
+                continue
+            union = len(set(ta) | set(tb))
+            if union == 0:
+                continue
+            j = len(set(ta) & set(tb)) / union
+            if j >= thr:
+                best[da] = max(best.get(da, -1.0), j)
+                best[db] = max(best.get(db, -1.0), j)
+                ra, rb = find(da), find(db)
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+    return {(find(d), d, j) for d, j in best.items() if find(d) != d}
+
+
+def _kernel_block(rows):
+    import numpy as np
+
+    return pd.DataFrame({
+        "doc_id": [r[0] for r in rows],
+        "toks": [np.array(r[1], dtype=object) for r in rows],
+        "probed": [r[2] for r in rows],
+    })
+
+
+def test_block_certificate_matches_bruteforce():
+    """The exact-route kernel against set jaccard + union-find on
+    randomized blocks (empty token sets included), with chunk budgets
+    from one key — every row range its own chunk — to one chunk for
+    the whole block."""
+    import random
+
+    from audio_quality_checker_spark.operators.dedup import (
+        _block_certificate,
+    )
+
+    rng = random.Random(17)
+    for trial in range(300):
+        n = rng.randint(0, 40)
+        vocab = [f"t{v}" for v in range(rng.randint(1, 12))]
+        ids = rng.sample(range(10_000), n)
+        rows = [
+            (ids[k], rng.sample(vocab, rng.randint(0, len(vocab))),
+             rng.random() < 0.3)
+            for k in range(n)
+        ]
+        thr = rng.choice([0.3, 0.5, 2 / 3, 0.8, 1.0])
+        out = _block_certificate(_kernel_block(rows), thr,
+                                 chunk_keys=rng.choice([1, 7, 50, 10**6]))
+        got = {(int(a), int(b), float(j))
+               for a, b, j in out.itertuples(index=False)}
+        assert got == _uf_certificate(rows, thr), trial
+
+
+def test_block_certificate_edge_cases():
+    """Union 0 gives no edge; a pair exactly at the threshold is an
+    edge; a probed x probed pair is never compared (it belongs to the
+    bucket below); a block spanning many chunks gives the one-chunk
+    answer."""
+    from audio_quality_checker_spark.operators.dedup import (
+        _block_certificate,
+    )
+
+    def edges(rows, thr, chunk_keys=10**6):
+        out = _block_certificate(_kernel_block(rows), thr,
+                                 chunk_keys=chunk_keys)
+        return {(int(a), int(b), float(j))
+                for a, b, j in out.itertuples(index=False)}
+
+    assert edges([(1, [], False), (2, [], False)], 0.5) == set()
+    at = [(1, list("abcd"), False), (2, list("abcde"), False)]
+    assert edges(at, 0.8) == {(1, 2, 0.8)}
+    assert edges(at, 0.8 + 1e-12) == set()
+    assert edges([(1, list("abc"), True), (2, list("abc"), True)],
+                 0.5) == set()
+    assert edges([(1, list("abc"), True), (2, list("abc"), False)],
+                 0.5) == {(1, 2, 1.0)}
+    # 60 rows in 6 near-identical clusters, 1-key chunks
+    big = [(100 * c + k, [f"c{c}w{j}" for j in range(10) if j != k % 10],
+            k % 4 == 3)
+           for c in range(6) for k in range(10)]
+    assert edges(big, 0.7, chunk_keys=1) == edges(big, 0.7) \
+        == _uf_certificate(big, 0.7)
+
+
+def test_guarded_surfaces_never_pair_null_keys(spark):
+    """Null lang and null text rows have no block: identical texts with
+    a null lang, and null texts in one lang, must not pair on any
+    surface (the blocked compare's `==` semantics — a groupBy alone
+    would put the nulls in one group)."""
+    from audio_quality_checker_spark.operators.components import keep_one
+    from audio_quality_checker_spark.operators.dedup import (
+        jaccard_edges_guarded,
+        jaccard_pairs_guarded,
+        near_dup_members_guarded,
+    )
+
+    text = "alpha beta gamma delta epsilon zeta"
+    df = spark.createDataFrame(
+        [(1, None, text), (2, None, text), (3, "en", None),
+         (4, "en", None), (5, "en", "   "), (6, "en", "   "),
+         (7, "en", text), (8, "en", text)],
+        "doc_id long, lang string, text string",
+    )
+    edges = jaccard_edges_guarded(df, threshold=0.5)
+    pairs = jaccard_pairs_guarded(df, threshold=0.5)
+    members = near_dup_members_guarded(df, threshold=0.5)
+    assert {(r["id_a"], r["id_b"]) for r in edges.collect()} == {(7, 8)}
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == {(7, 8)}
+    assert {r["doc_id"] for r in members.collect()} == {7, 8}
+    survivors = {r["doc_id"] for r in keep_one(df, edges).collect()}
+    assert survivors == {1, 2, 3, 4, 5, 6, 7}
+    for out in (edges, pairs, members):
+        out.unpersist()
+

@@ -167,6 +167,74 @@ def test_guarded_routes_filter_above_block_count(spark):
     out.unpersist()
 
 
+def _planted_blocks(spark):
+    """An oversized 'en' block of ten 4-doc near-identical clusters
+    (disjoint vocabularies, pairwise jaccard >= 0.9) plus 20 singletons,
+    and a 5-doc 'de' block with one 3-doc cluster.  Every token is 6
+    chars, so each lang is one length bucket."""
+    rows, doc = [], 0
+
+    def text(prefix, k, swap=None):
+        toks = [f"{prefix}{k:02d}w{j:02d}" for j in range(40)]
+        if swap is not None:
+            toks[swap] = f"{prefix}{k:02d}v{swap:02d}"
+        return " ".join(toks)
+
+    for k in range(10):
+        for swap in (None, 3, 17, 29):
+            rows.append((doc, "en", text("c", k, swap)))
+            doc += 1
+    for k in range(20):
+        rows.append((doc, "en", text("s", k)))
+        doc += 1
+    for swap in (None, 5, 9):
+        rows.append((doc, "de", text("d", 0, swap)))
+        doc += 1
+    for k in (1, 2):
+        rows.append((doc, "de", text("d", k)))
+        doc += 1
+    return spark.createDataFrame(
+        rows, "doc_id long, lang string, text string"
+    )
+
+
+def test_hot_route_planned_only_over_cap(spark):
+    """The same fixture with block_cap below the largest block (the LSH
+    route runs for 'en') and above it (no block over the cap, the LSH
+    route is not planned): keep-one survivors over the edge surface, the
+    membership surface and the pair surface must be identical, and the
+    pruned plans must carry no signature MapInPandas node."""
+    from audio_quality_checker_spark.operators.components import keep_one
+    from audio_quality_checker_spark.operators.dedup import (
+        jaccard_edges_guarded,
+        jaccard_pairs_guarded,
+        near_dup_members_guarded,
+    )
+
+    df = _planted_blocks(spark)
+    results = {}
+    for cap in (30, 1_000):
+        edges = jaccard_edges_guarded(df, threshold=0.8, block_cap=cap)
+        members = near_dup_members_guarded(df, threshold=0.8,
+                                           block_cap=cap)
+        pairs = jaccard_pairs_guarded(df, threshold=0.8, block_cap=cap)
+        has_sigs = [bool(re.search(r"\bMapInPandas\b", fmt(out)))
+                    for out in (edges, members, pairs)]
+        assert has_sigs == [cap == 30] * 3, (cap, has_sigs)
+        results[cap] = (
+            {r["doc_id"] for r in keep_one(df, edges).collect()},
+            {r["doc_id"] for r in members.collect()},
+            {(r["id_a"], r["id_b"], r["jaccard"]) for r in pairs.collect()},
+        )
+        for out in (edges, members, pairs):
+            out.unpersist()
+    assert results[30] == results[1_000]
+    survivors, members, pairs = results[1_000]
+    assert len(survivors) == 10 + 20 + 1 + 2
+    assert len(members) == 40 + 3
+    assert len(pairs) == 10 * 6 + 3
+
+
 def test_bq_topk_candidate_cut_is_two_phase(spark):
     """The hamming top-m prefilter must not funnel a query's full corpus
     through one reducer.  Catalyst's rank-limit pushdown plants a
