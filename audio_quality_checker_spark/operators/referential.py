@@ -108,7 +108,12 @@ def build_bloom(dim: DataFrame, key_col: str, fpp: float = 0.01) -> BloomFilter:
     plan (the bounds_simhash refusal precedent; reference analog:
     bit_depth.rs:122,200 sampling caps bound cost before paying it).
     """
-    n_keys = dim.count()
+    # one action serves both the sizing count and the small build: at
+    # most cap+1 keys reach the driver, nulls included so n is the row
+    # count; only an over-cap dimension pays a count
+    keys = [r[0] for r in dim.select(key_col).limit(
+        DRIVER_BUILD_MAX_KEYS + 1).collect()]
+    n_keys = len(keys) if len(keys) <= DRIVER_BUILD_MAX_KEYS else dim.count()
     proto = BloomFilter.sized_for(max(n_keys, 1), fpp)
     m_bits, n_hashes = proto.m_bits, proto.n_hashes
     if m_bits // 8 > DRIVER_BLOOM_MAX_BYTES:
@@ -122,9 +127,7 @@ def build_bloom(dim: DataFrame, key_col: str, fpp: float = 0.01) -> BloomFilter:
 
     if n_keys <= DRIVER_BUILD_MAX_KEYS:
         out = BloomFilter(m_bits, n_hashes)
-        vals = [r[0] for r in dim.select(key_col).where(
-            F.col(key_col).isNotNull()).collect()]
-        out.add_many(vals)
+        out.add_many([k for k in keys if k is not None])
         return out
 
     def build(batches):

@@ -9,12 +9,21 @@ computes every scalar statistic in a single partial+final hash
 aggregation — the `analyze_loudness` one-pass shape (true_peak.rs:143-164)
 generalized to the whole suite.  Checks are then cheap expressions over
 the tiny stats frame.
+
+The two HyperLogLog++ distinct counts are the exception: inside the wide
+aggregate `approx_count_distinct` would add 3,278 long fields to its
+buffer, whose generated projections cost ~2 s per task at any row count.
+They come instead from a narrow register aggregate over the same feature
+rows (`functions.hll`: max(rho) per (p_day, column, register), one pandas
+estimate per day) joined back to the wide row — the same counts, Spark's
+estimator to the unit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from audio_quality_checker_spark.functions.hll import hll_distinct
 from audio_quality_checker_spark.sources.pages import LEN_BIN_EDGES, LEN_BIN_LABELS
 
 SHORT_TEXT_LEN = 200     # suspicious-short gate (TruncatedText detector)
@@ -74,19 +83,19 @@ def light_features(features: DataFrame) -> DataFrame:
 
 
 def partition_stats(features: DataFrame, exact: bool = False) -> DataFrame:
-    """One shuffle, every scalar statistic.
+    """One shuffle over the feature rows, every scalar statistic.
 
-    ``exact=False`` uses HyperLogLog++ (`approx_count_distinct`) for url
-    cardinality — the direct heir of the unique-values-ratio bit-depth
-    method (bit_depth.rs:199-250) and the north rule's uniqueness check.
-    ``exact=True`` is the small-scale oracle (`count_distinct`).
+    ``exact=False`` counts distinct urls and hosts with HyperLogLog++ at
+    rsd 0.01 (`approx_count_distinct`'s numbers, from register rows:
+    `functions.hll.hll_distinct`) — the direct heir of the
+    unique-values-ratio bit-depth method (bit_depth.rs:199-250) and the
+    north rule's uniqueness check.  ``exact=True`` is the small-scale
+    oracle (`count_distinct`) inside the wide aggregate.
     """
-    distinct_urls = (
-        F.count_distinct("url") if exact else F.approx_count_distinct("url", 0.01)
-    )
-    distinct_hosts = (
-        F.count_distinct("host") if exact else F.approx_count_distinct("host", 0.01)
-    )
+    distinct = [
+        F.count_distinct("url").alias("n_urls_distinct"),
+        F.count_distinct("host").alias("n_hosts_distinct"),
+    ] if exact else []
     cond = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
     extra = []
     if "host_known" in features.columns:
@@ -108,11 +117,10 @@ def partition_stats(features: DataFrame, exact: bool = False) -> DataFrame:
         # the SAME single wide pass — the namesake check costs no extra scan
         if c.startswith("sv_"):
             extra.append(cond(F.col(c)).alias(f"n_{c}"))
-    return features.groupBy("p_day").agg(
+    stats = features.groupBy("p_day").agg(
         *extra,
         F.count(F.lit(1)).alias("n_rows"),
-        distinct_urls.alias("n_urls_distinct"),
-        distinct_hosts.alias("n_hosts_distinct"),
+        *distinct,
         cond(F.col("url").isNull()).alias("url_nulls"),
         cond(F.col("html_is_null")).alias("html_nulls"),
         cond(F.col("text_is_null")).alias("text_nulls"),
@@ -152,6 +160,24 @@ def partition_stats(features: DataFrame, exact: bool = False) -> DataFrame:
         F.col("len_p50_p95")[0].alias("len_p50"),
         F.col("len_p50_p95")[1].alias("len_p95"),
     ).drop("len_p50_p95")
+    if exact:
+        return stats
+    est = hll_distinct(
+        features, "p_day",
+        {"n_urls_distinct": "url", "n_hosts_distinct": "host"}, rsd=0.01,
+    ).withColumnRenamed("p_day", "_hll_day")
+    # a day whose urls and hosts are all null has no register rows: 0,
+    # as approx_count_distinct reports; columns keep the wide order
+    cols = stats.columns
+    at = cols.index("n_rows") + 1
+    return stats.join(
+        est, stats["p_day"].eqNullSafe(est["_hll_day"]), "left"
+    ).select(
+        *[stats[c] for c in cols[:at]],
+        *[F.coalesce(est[c], F.lit(0).cast("long")).alias(c)
+          for c in ("n_urls_distinct", "n_hosts_distinct")],
+        *[stats[c] for c in cols[at:]],
+    )
 
 
 def distribution_counts(features: DataFrame, column: str) -> DataFrame:

@@ -16,6 +16,10 @@ optimizer cannot make for us (SURVEY.md §4):
 
 Shuffle inventory for the full pass (what survives at 100 TB):
  - 1 wide shuffle: groupBy(p_day) stats            [partial+final hash agg]
+ - 2 narrow shuffles of HLL++ register rows: partial max(rho) per
+   (p_day, column, register), then the final registers to one pandas
+   estimate per p_day (<= 2 x 16,384 rows per day, never the feature
+   rows); the estimates broadcast-join back to the stats row
  - 2 narrow shuffles on pre-aggregated counts: lang/len histograms
  - 1 narrow shuffle: extraction sample agg
  - 1 narrow shuffle: referential agg
@@ -52,6 +56,7 @@ from audio_quality_checker_spark.operators.verdict import (
     assemble_verdicts,
     combine_violations,
 )
+from audio_quality_checker_spark.session import job_description
 
 
 @dataclass
@@ -105,11 +110,10 @@ def run_checks(
 
     expected = expected_schema or PAGES_EXPECTATION
 
-    bloom = (
-        build_bloom(ref_hosts, "host")
-        if suite.check_referential and ref_hosts is not None
-        else None
-    )
+    bloom = None
+    if suite.check_referential and ref_hosts is not None:
+        with job_description(spark, "validate: bloom build"):
+            bloom = build_bloom(ref_hosts, "host")
 
     fused = suite.check_extraction and suite.check_extraction_full
     if fused:
@@ -157,7 +161,11 @@ def run_checks(
 
     stats = partition_stats(light, exact=exact)
     stats.persist(StorageLevel.MEMORY_AND_DISK)
-    stats.count()
+    # the HLL++ register aggregate and its per-day estimate are branches
+    # of this one action (AQE runs their stages beside the wide
+    # aggregate's), so their jobs carry this label
+    with job_description(spark, "validate: stats pass + HLL registers"):
+        stats.count()
 
     # All stats-derived checks (nulls, lengths, uniqueness, referential,
     # extraction errors) emit from ONE explode over the tiny stats frame;
@@ -200,9 +208,10 @@ def run_checks(
             )
         )
     if suite.check_drift and baseline is not None:
-        frames.append(
-            drift_violations(distribution_counts_all(light), baseline, suite)
-        )
+        with job_description(spark, "validate: drift histograms"):
+            frames.append(
+                drift_violations(distribution_counts_all(light), baseline, suite)
+            )
         if suite.check_exact_ks:
             # opt-in exact-KS oracle on a seeded raw-length sample (the
             # binned KS above is the scale path; this is the FULL-suite
@@ -211,7 +220,8 @@ def run_checks(
                 exact_ks_violations,
             )
 
-            frames.append(exact_ks_violations(light, baseline, suite))
+            with job_description(spark, "validate: exact KS sample"):
+                frames.append(exact_ks_violations(light, baseline, suite))
     if suite.check_trend:
         from audio_quality_checker_spark.operators.drift import (
             trend_violations,
@@ -243,7 +253,9 @@ def run_checks(
         # pair search reads (url, p_day, lang, text) from the source
         # scan in both modes — the guarded surface tokenizes and blocks
         # internally, so neither cached frame helps it
-        frames.append(near_dup_violations(with_partition_key(pages), suite))
+        with job_description(spark, "validate: near-dup rate"):
+            frames.append(
+                near_dup_violations(with_partition_key(pages), suite))
     if suite.check_extraction and not fused:
         # sampled mode: the only payload consumer reads html+text from the
         # SOURCE scan (column-pruned), not from the cache
@@ -282,9 +294,10 @@ def validate(
     baseline = spark.read.parquet(baseline_path) if baseline_path else None
     res = run_checks(spark, pages, ref_hosts, baseline, suite)
     if results_root:
-        res.verdicts.write.mode("overwrite").parquet(f"{results_root}/verdicts")
-        res.violations.write.mode("overwrite").parquet(f"{results_root}/violations")
-        res.stats.write.mode("overwrite").parquet(f"{results_root}/stats")
+        for name in ("verdicts", "violations", "stats"):
+            with job_description(spark, f"validate: write {name}"):
+                getattr(res, name).write.mode("overwrite").parquet(
+                    f"{results_root}/{name}")
     return res
 
 

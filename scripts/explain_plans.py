@@ -72,8 +72,12 @@ def main() -> int:
         ),
         (
             "One-pass per-partition stats (single partial+final hash agg)",
-            "Every scalar stat in one Exchange; look for a single "
-            "HashAggregate pair around one Exchange hashpartitioning(p_day).",
+            "Every scalar stat in one Exchange of the feature rows; look for "
+            "a single HashAggregate pair around one Exchange "
+            "hashpartitioning(p_day).  The HLL++ distinct counts ride two "
+            "small Exchanges of register rows (max rho per p_day, column, "
+            "register) into one FlatMapGroupsInPandas estimate per day, "
+            "broadcast-joined back.",
             fmt(partition_stats(light)),
         ),
         (

@@ -89,3 +89,44 @@ def test_min_confidence_filter(spark, golden):
     confs = [r["confidence"] for r in res.violations.collect()]
     res.unpersist()
     assert confs and all(c >= 0.9 for c in confs)
+
+
+def test_validate_labels_its_jobs(spark, golden, tmp_path):
+    """Each action of validate() carries a job description (never a job
+    group: the benchmark attributes its counters by group), read back
+    from the application status store; the caller's label is restored."""
+    from audio_quality_checker_spark.plans.validate import validate
+
+    paths = {}
+    for name, pdf in (("pages", golden["pages_pdf"]),
+                      ("ref_hosts", golden["ref_hosts"].toPandas()),
+                      ("baseline", golden["baseline"].toPandas())):
+        paths[name] = str(tmp_path / name)
+        spark.createDataFrame(pdf).write.parquet(paths[name])
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def jobs():
+        return {j.jobId(): j for j in as_java(store.jobsList(None))}
+
+    before = set(jobs())
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        validate(spark, paths["pages"], paths["ref_hosts"], paths["baseline"],
+                 results_root=str(tmp_path / "out")).unpersist()
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    new = [j for i, j in jobs().items() if i not in before]
+    labels = {j.description().get() for j in new if j.description().isDefined()}
+    assert {
+        "validate: bloom build",
+        "validate: stats pass + HLL registers",
+        "validate: drift histograms",
+        "validate: write verdicts",
+        "validate: write violations",
+        "validate: write stats",
+    } <= labels, labels
+    assert all(j.jobGroup().isEmpty() for j in new)

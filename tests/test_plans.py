@@ -63,9 +63,23 @@ def test_payload_scan_is_column_pruned(spark, pages_parquet):
         assert col not in seg, f"{col} leaked into the payload scan: {seg}"
 
 
+def shuffle_inputs(plan: str) -> list[list[str]]:
+    """Input columns (expression ids stripped) of each shuffle Exchange
+    node's detail block; broadcast exchanges are not shuffles."""
+    out = []
+    for block in re.split(r"\n(?=\(\d+\) )", plan):
+        if re.match(r"\(\d+\) Exchange\b", block):
+            cols = re.search(r"Input \[\d+\]: \[(.*)\]", block).group(1)
+            out.append([re.sub(r"#\d+L?$", "", c) for c in cols.split(", ")])
+    return out
+
+
 def test_partition_stats_single_exchange(spark, pages_parquet):
-    """Every scalar stat of the one-pass agg rides ONE shuffle: exactly
-    one Exchange (partial+final HashAggregate around it)."""
+    """Every scalar stat of the one-pass agg rides ONE shuffle of the
+    feature rows (partial+final HashAggregate around it).  The HLL++
+    distinct counts come from register rows: their two shuffles move
+    only (p_day, col, idx, max rho) rows, and no HyperLogLogPlusPlus
+    aggregate (a 1,639-long buffer per column) is planned."""
     from audio_quality_checker_spark.operators.stats import (
         derive_row_features,
         light_features,
@@ -73,8 +87,14 @@ def test_partition_stats_single_exchange(spark, pages_parquet):
     )
 
     pages = spark.read.parquet(pages_parquet)
-    plan = fmt(partition_stats(light_features(derive_row_features(pages))))
-    assert n_exchanges(plan) == 1, plan
+    stats = partition_stats(light_features(derive_row_features(pages)))
+    inputs = shuffle_inputs(fmt(stats))
+    register_cols = {"p_day", "col", "idx", "_groupingexpression", "max", "rho"}
+    registers = [c for c in inputs if set(c) <= register_cols]
+    assert len(inputs) == 3 and len(registers) == 2, inputs
+    qe = stats._jdf.queryExecution()
+    for plan in (qe.optimizedPlan(), qe.sparkPlan()):
+        assert "HyperLogLogPlusPlus" not in plan.toJSON()
 
 
 def test_grouping_sets_histograms_single_agg_exchange(spark, pages_parquet):

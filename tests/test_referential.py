@@ -93,3 +93,25 @@ def test_bloom_distributed_build_tree_merges(spark):
     finally:
         R.DRIVER_BUILD_MAX_KEYS = old
     assert all(bf.contains_many(hosts))
+
+
+def test_bloom_bits_with_null_keys(spark):
+    """Null keys count toward the filter's sizing n (the dimension's row
+    count) but are never added; the driver build and the forced
+    distributed build give the same bits."""
+    from audio_quality_checker_spark.operators import referential as R
+
+    hosts = [f"h{i}.example.com" for i in range(300)] + [None] * 40
+    dim = spark.createDataFrame([(h,) for h in hosts], "host string")
+    want = BloomFilter.sized_for(len(hosts))
+    want.add_many(hosts[:300])
+    got = R.build_bloom(dim, "host")
+    assert (got.m_bits, got.n_hashes) == (want.m_bits, want.n_hashes)
+    assert np.array_equal(got.bits, want.bits)
+    old = R.DRIVER_BUILD_MAX_KEYS
+    try:
+        R.DRIVER_BUILD_MAX_KEYS = 10  # force the distributed path
+        dist = R.build_bloom(dim, "host")
+    finally:
+        R.DRIVER_BUILD_MAX_KEYS = old
+    assert np.array_equal(dist.bits, want.bits)
